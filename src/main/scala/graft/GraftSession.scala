@@ -15,6 +15,29 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Size of Spark's generated-code cache (`spark.sql.codegen.cache.maxEntries`).
+    *
+    * The cache is an LRU of compiled sources. Spark's default of 100 entries
+    * is smaller than one pass of this engine's pipelines, so a repeated pass
+    * evicts each entry just before it needs it again and recompiles
+    * everything: a warm perfbench `lulc_raster` pass compiled ~406 generated
+    * classes although the whole run has ~236 distinct ones. The largest
+    * working set is `Bench`'s warm-up: one pass over the full registry at
+    * sf0.001 compiles 2483 distinct sources (6437 classes, counted by
+    * `CodegenMetrics` with an oversized cache); the same registry at sf0.01
+    * adds 141 more. 4096 holds that with headroom and both perfbench workloads
+    * (~250 each) many times over. A cached entry retains ~32 KB of heap
+    * (measured after GC: 222 MB with the registry pass cached vs 146 MB at
+    * 100 entries), so a full cache costs ~130 MB.
+    *
+    * Spark reads this static conf once per JVM, when the `CodeGenerator`
+    * object first initializes. It takes effect only if a session built from
+    * [[builder]] exists before anything touches `CodeGenerator` (a query, or
+    * a read of `CodeGenerator.compileTime`); otherwise the JVM keeps 100
+    * entries for its lifetime.
+    */
+  val CodegenCacheEntries: Int = 4096
+
   def builder(
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
       shufflePartitions: Int = 32): SparkSession.Builder =
@@ -41,6 +64,7 @@ object GraftSession {
       // (dual-SF parity green across the registry).
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()

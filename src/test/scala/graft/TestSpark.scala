@@ -2,7 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole forked test JVM. */
+/** One shared local session for the whole forked test JVM.
+  *
+  * Every spec reaches Spark through this session, so it exists before any
+  * query initializes `CodeGenerator`, which reads the codegen cache size
+  * from [[GraftSession]] once per JVM (CodegenReuseSpec depends on that).
+  */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = GraftSession
